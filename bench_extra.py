@@ -9,6 +9,10 @@ Usage:
     python bench_extra.py --reps 3 q1 q2
     python bench_extra.py --plan before q1 q2  # also dump formatted plans
     python bench_extra.py --plan-only after q1 # dump plans, skip timing
+
+Runs at local[SPARK_GRAFT_CPUS] (default: os.cpu_count()) over
+SPARK_GRAFT_SF_DIR, and prints nproc, SPARK_GRAFT_CPUS and the master
+string before and with its results.
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
 
 def main() -> None:
@@ -56,7 +60,11 @@ def main() -> None:
     from ocr_cezam_spark.plans.audit import formatted_plan
     from ocr_cezam_spark.session import get_spark
 
-    spark = get_spark(app="bench_extra", master=f"local[{CPUS}]",
+    master = f"local[{CPUS}]"
+    env = {"nproc": os.cpu_count(), "SPARK_GRAFT_CPUS": CPUS,
+           "master": master}
+    print(json.dumps(env), flush=True)
+    spark = get_spark(app="bench_extra", master=master,
                       shuffle_partitions=CPUS, extra=extra)
     # warm JVM + python workers like bench.py
     spark.range(0, 1_000_000, 1, CPUS).selectExpr("sum(id) AS s") \
@@ -90,7 +98,8 @@ def main() -> None:
         print(f"{name}: {out[name]}  (samples: "
               f"{[round(s, 3) for s in samples]})", flush=True)
     if out:
-        print(json.dumps({"queries": out, "sf_dir": SF_DIR, "reps": reps}))
+        print(json.dumps({"queries": out, "sf_dir": SF_DIR, "reps": reps,
+                          **env}))
     spark.stop()
 
 

@@ -344,12 +344,6 @@ def corpus_rows(n: int, seed: int = SEED) -> list[dict]:
     return [make_page(i, seed) for i in range(n)]
 
 
-def corpus_pandas(n: int, seed: int = SEED):
-    import pandas as pd
-
-    return pd.DataFrame(corpus_rows(n, seed))
-
-
 CORPUS_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )

@@ -663,7 +663,11 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
     majority test count*2 > n_words compares exact integers either way.
     explode_outer keeps null-text docs as a single null-word row, whose
     votes are all zero — the same all-zero chunks the in-row form
-    emitted for null text."""
+    emitted for null text.
+
+    Precondition: ``id_col`` is unique. The votes aggregate on the id, so
+    rows sharing an id are merged into ONE signature row voted over all
+    of their words; no error is raised."""
     words = _words(text_col)
     exploded = docs.select(F.col(id_col), F.explode_outer(words).alias("_w"))
     d = F.md5("_w")
@@ -803,13 +807,15 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     component = min doc_id reachable through the pair graph.
 
     Iterative min-label propagation with alternating-direction joins —
-    each iteration is one shuffle on node id and runs UNTIL FIXPOINT
-    (changed-count 0); ``max_iter`` is a safety valve that *raises* rather
-    than silently returning unconverged labels (a pair graph with diameter
-    > max_iter would otherwise get wrong components with no error).
-    Iterations needed = graph diameter (near-dup clusters are tiny, so 2-3
-    in practice). localCheckpoint truncates the growing plan each round
-    (the classic iterative-algorithm lineage blowup).
+    each half-step is one shuffle on node id and the loop runs UNTIL
+    FIXPOINT (changed-count 0). Half-steps needed = graph diameter D
+    (near-dup clusters are tiny, so 2-3 in practice), plus one to see no
+    change. Budget: ``max_iter // 2 + 1`` rounds of two half-steps, so
+    every graph with D <= max_iter - 1 converges (the same graphs a
+    one-half-step-per-round loop of ``max_iter`` rounds accepts). Past
+    the budget the safety valve *raises* rather than silently returning
+    unconverged labels. localCheckpoint truncates the growing plan each
+    round (the classic iterative-algorithm lineage blowup).
     """
     from pyspark.sql import functions as F  # noqa: N812
 
@@ -856,7 +862,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     # comparing a round's END against its START ("orig") detects a change
     # in either half-step, and running one half-step past convergence is
     # a no-op on the result. Same fixpoint, half the driver rounds.
-    for _ in range((max_iter + 1) // 2):
+    rounds = max_iter // 2 + 1
+    for _ in range(rounds):
         start = labels.withColumn("orig", F.col("component"))
         stepped = step(step(start))
         new_labels = stepped.select(
@@ -870,8 +877,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(pair-graph diameter exceeds the safety valve)"
+            f"connected_components did not converge in {rounds} rounds of "
+            f"two half-steps (max_iter={max_iter} covers pair-graph "
+            f"diameter <= {max_iter - 1})"
         )
     return labels
 
@@ -1559,6 +1567,11 @@ def incremental_near_dup(new_docs: DataFrame, corpus: DataFrame,
     fraction; emitted value rounded 4 dp), ordered by (new_id,
     corpus_id). Same MINHASH_COEFFS as the batch pair generator — the
     two operators' estimates are directly comparable.
+
+    Precondition: ``id_col`` is unique within each side. The signatures
+    aggregate on the id, so rows sharing an id are merged into ONE
+    signature over the union of their shingles and yield at most one
+    row per (new_id, corpus_id); no error is raised.
     """
     # Signatures are computed once each side and lazily checkpointed:
     # the band join consumes the band keys, the verify step re-attaches

@@ -13,8 +13,6 @@ UDFs, no driver-side loops.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -351,11 +349,6 @@ def bm25_multi_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", id_col, "score", "n_matched")
     )
-
-
-def bm25_idf(n_docs: float, df: float) -> float:
-    """Reference scalar for tests."""
-    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
 def phrase_search(docs: DataFrame, phrase: str,

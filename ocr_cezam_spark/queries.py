@@ -54,64 +54,52 @@ def _register(name: str, fn: QueryFn, oracle: str | None) -> None:
         ORACLES[name] = oracle
 
 
-# Tables whose consumers are CPU-BOUND per row (shingle md5 passes,
-# simhash votes, quality stats, interpreted vector math): these get the
-# _spread parallelism floor. The relational tables (lineitem, orders,
-# events, ...) stay unspread — their queries are scan+aggregate shapes
-# where partial aggregation already collapses the single-split input and
-# a corpus-wide repartition costs more than it buys (measured 0.4s ->
-# 1.0s on pricing_summary).
-_SPREAD_TABLES = {"documents", "embeddings"}
+# One read rule: every table goes through _t, and only the two corpus
+# tables are spread, by _spread on their id column (_SPREAD_KEYS). Their
+# CPU-bound consumers (shingle md5, simhash votes, quality stats,
+# interpreted vector math) need every core; the light ones pay one
+# exchange (measured 0.1-0.3 s per query at sf0.1 on 4 cores). The
+# relational tables (lineitem, orders, events, ...) stay unspread: their
+# queries are scan+aggregate shapes where partial aggregation already
+# collapses the single-split input, and a repartition costs more than it
+# buys (measured 0.4s -> 1.0s on pricing_summary).
+_SPREAD_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _spread(df) if name in _SPREAD_TABLES else df
+    key = _SPREAD_KEYS.get(name)
+    return _spread(df, key) if key is not None else df
 
 
-def _t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Unspread read — for the LIGHT document consumers (single digest
-    aggregations, tiny-k sketches, url bookkeeping) where the _spread
-    shuffle costs more than their whole single-task plan; measured
-    query-by-query against the r7 bench (each opted-out query regressed
-    >= 1.2x with the floor, each spread query improved)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
+def _spread(df: DataFrame, key: str) -> DataFrame:
     """Scale-adaptive input-parallelism floor (optimization guide section
     2.5, input skew: "one huge unsplittable file ... repartition
     immediately after the read"). The sf test tables are single-file,
     SINGLE-ROW-GROUP parquets, so every scan is structurally one task no
-    matter how small spark.sql.files.maxPartitionBytes is set — which
-    capped every CPU-heavy per-row stage (shingle md5, simhash votes,
-    quality stats) at 1-2 of the session's cores. Repartition to the
-    default parallelism ONLY when the scan is under-partitioned; on a
-    production multi-file table the scan already carries more splits
-    than cores and this is a no-op (no shuffle added at scale). Results
-    are partitioning-independent: every registered query's output is
-    hash-checked order-insensitively and all rank/limit paths order
-    explicitly."""
+    matter how small spark.sql.files.maxPartitionBytes is set.
+
+    When the scan has fewer partitions than the default parallelism,
+    hash-repartition on the id column ``key`` alone; otherwise (a
+    production multi-file table) return ``df`` unchanged, so no shuffle
+    is added at scale. Key-only because the bytes hashed and moved are
+    the cost of a repartition: hashing every column (text, vector arrays)
+    made the floor cost more than it saved for the light consumers. A
+    keyed hash is also deterministic across retries, unlike keyless
+    repartition(n), whose sortBeforeRepartition runs single-threaded
+    inside the one scan task. Results are partitioning-independent: every
+    registered query's output is hash-checked order-insensitively and all
+    rank/limit paths order explicitly."""
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
-        # hash-repartition on every column rather than round-robin:
-        # keyless repartition(n) first pays a LOCAL SORT of its input
-        # (sortBeforeRepartition, for retry determinism) which would run
-        # single-threaded inside the one under-partitioned scan task —
-        # measured 3-4x slower than the hash spread on the 600k-row
-        # table. Hashing the full row is deterministic across retries.
-        return df.repartition(n, *[F.col(c) for c in df.columns])
+        return df.repartition(n, F.col(key))
     return df
 
 
-def _cloned_docs(spark: SparkSession, sf_dir: str,
-                 spread: bool = True) -> DataFrame:
+def _cloned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents plus an exact clone of every doc at doc_id+1000000 —
-    guarantees every dedup query has true duplicates to find.
-    ``spread=False`` for light consumers (exact_dedup's single digest
-    aggregation) where the parallelism floor costs more than it buys."""
-    t = _t if spread else _t_raw
-    d = t(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    guarantees every dedup query has true duplicates to find."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     clone = d.select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "source"
     )
@@ -397,7 +385,7 @@ _TQ_SHORT = "court texte de cinq mots"
 
 def _tq_docs(s: SparkSession, d: str) -> DataFrame:
     doc_id = F.col("doc_id")
-    return _t_raw(s, d, "documents").select(
+    return _t(s, d, "documents").select(
         "doc_id",
         F.when(doc_id % 10 == 7, F.lit(_TQ_SHORT))
         .when(doc_id % 9 == 4, F.concat("text", F.lit(_TQ_LONG_TAIL)))
@@ -1104,7 +1092,7 @@ _register(
 
 _register(
     "dedup_exact",
-    lambda s, d: dedup.exact_dedup(_cloned_docs(s, d, spread=False)),
+    lambda s, d: dedup.exact_dedup(_cloned_docs(s, d)),
     f"""
     WITH corpus AS ({_CLONED_SQL})
     SELECT md5(text) AS digest, min(doc_id) AS keeper, count(*) AS n_copies
@@ -1515,7 +1503,7 @@ def _sitemap_q(s: SparkSession, d: str) -> DataFrame:
         F.lit("?a=1&amp;b=2 </loc></url>"),
     )
     sm = (
-        _t_raw(s, d, "documents")
+        _t(s, d, "documents")
         .select((doc_id % 50).alias("hk"), doc_id, entry.alias("e"))
         .groupBy("hk")
         .agg(
@@ -1821,7 +1809,7 @@ _register(
 def _crawl_pages(s: SparkSession, d: str) -> DataFrame:
     doc_id = F.col("doc_id")
     crawls = [
-        _t_raw(s, d, "documents")
+        _t(s, d, "documents")
         .filter(doc_id % (k + 2) == 0)
         .select(
             F.concat(
@@ -1942,7 +1930,7 @@ _register(
 # 7 (gone), with text edited for multiples of 5 (changed) and a batch of
 # brand-new urls for multiples of 9 (added); everything else unchanged.
 def _churn_crawls(s: SparkSession, d: str):
-    base = _t_raw(s, d, "documents")
+    base = _t(s, d, "documents")
     doc_id = F.col("doc_id")
     url = F.concat(
         F.lit("https://h"), (doc_id % 50).cast("string"),
@@ -2537,7 +2525,7 @@ _PARA_BOILER = "Abonnez-vous à la newsletter"
 
 def _para_docs(s: SparkSession, d: str) -> DataFrame:
     doc_id = F.col("doc_id")
-    return _t_raw(s, d, "documents").select(
+    return _t(s, d, "documents").select(
         "doc_id",
         F.concat(
             "text",
@@ -2712,7 +2700,7 @@ _register(
 
 _register(
     "domain_quota_sample",
-    lambda s, d: skew.domain_quota_sample(_t_raw(s, d, "documents")),
+    lambda s, d: skew.domain_quota_sample(_t(s, d, "documents")),
     """
     SELECT doc_id, source, sample_rank FROM (
       SELECT doc_id, source,
@@ -2765,7 +2753,7 @@ def _incr_new_batch(s: SparkSession, d: str) -> DataFrame:
     """Increment fixture: even docs re-crawled verbatim under new ids
     (must be dropped as corpus dups), odd docs re-crawled with changed
     content (must survive)."""
-    base = _t_raw(s, d, "documents").select("doc_id", "text")
+    base = _t(s, d, "documents").select("doc_id", "text")
     dup = base.filter(F.col("doc_id") % 2 == 0).select(
         (F.col("doc_id") + 3_000_000).alias("doc_id"), "text"
     )
@@ -2780,7 +2768,7 @@ _register(
     "incremental_dedup",
     lambda s, d: dedup.incremental_dedup(
         _incr_new_batch(s, d),
-        _t_raw(s, d, "documents").select("doc_id", "text"),
+        _t(s, d, "documents").select("doc_id", "text"),
         expected_items=100_000,
     ),
     """
@@ -4793,7 +4781,7 @@ _BM25_TERMS = ["spark", "join", "window", "fast"]
 _register(
     "bm25_topk",
     lambda s, d: retrieval.bm25_topk(
-        _t_raw(s, d, "documents"), _BM25_TERMS, k=10
+        _t(s, d, "documents"), _BM25_TERMS, k=10
     ),
     f"""
     WITH tf AS ({_TF_SQL}),
@@ -4881,7 +4869,7 @@ _BM25_MULTI = [
 
 def _bm25_multi(s: SparkSession, d: str) -> DataFrame:
     q = s.createDataFrame(_BM25_MULTI, "query_id long, term string, weight double")
-    return retrieval.bm25_multi_topk(_t_raw(s, d, "documents"), q, k=5)
+    return retrieval.bm25_multi_topk(_t(s, d, "documents"), q, k=5)
 
 
 _register(
@@ -4936,7 +4924,7 @@ _WD_PASSAGE = " ".join(f"wd{i}" for i in range(35))
 
 def _wd_docs(s: SparkSession, d: str) -> DataFrame:
     doc_id = F.col("doc_id")
-    base = _t_raw(s, d, "documents").select(
+    base = _t(s, d, "documents").select(
         "doc_id",
         F.when(doc_id % 5 == 1,
                F.concat(F.lit(_WD_PASSAGE + " "), F.col("text")))
@@ -5101,7 +5089,7 @@ _register("host_pagerank", _pagerank_query, _pagerank_oracle())
 def _recip_q(s: SparkSession, d: str) -> DataFrame:
     doc_id = F.col("doc_id")
     organic = (
-        _t_raw(s, d, "documents")
+        _t(s, d, "documents")
         .select(
             F.col("source").alias("src"),
             F.explode(F.array(
@@ -5113,7 +5101,7 @@ def _recip_q(s: SparkSession, d: str) -> DataFrame:
     a = F.concat(F.lit("farm"), (doc_id % 3).cast("string"))
     b = F.concat(F.lit("farm"), ((doc_id + 1) % 3).cast("string"))
     farm = (
-        _t_raw(s, d, "documents")
+        _t(s, d, "documents")
         .filter(doc_id % 25 == 0)
         .select(F.explode(F.array(
             F.struct(a.alias("src"), b.alias("dst")),
@@ -5587,7 +5575,7 @@ _BLOOM_URL_SQL = ("'https://h' || CAST({c} % 50 AS VARCHAR)"
 
 
 def _bloom_member_q(s: SparkSession, d: str) -> DataFrame:
-    docs = _t_raw(s, d, "documents")
+    docs = _t(s, d, "documents")
     build = docs.select(_bloom_url(F.col("doc_id")).alias("key"))
     probe = docs.select(
         _bloom_url(F.col("doc_id") + 250).alias("key")
@@ -5614,7 +5602,7 @@ _register(
 _register(
     "bloom_merge",
     lambda s, d: sketch.bloom_merge(
-        _t_raw(s, d, "documents").select(
+        _t(s, d, "documents").select(
             _bloom_url(F.col("doc_id")).alias("key"),
             (F.col("doc_id") % 3).alias("shard"),
         ),
@@ -5956,7 +5944,7 @@ _register(
 _register(
     "hdr_quantiles",
     lambda s, d: sketch.hdr_quantiles(
-        _t_raw(s, d, "documents"), "n_chars", qs=(0.5, 0.9, 0.99),
+        _t(s, d, "documents"), "n_chars", qs=(0.5, 0.9, 0.99),
         group_col="source",
     ),
     sketch.hdr_quantiles_sql("n_chars", qs=(0.5, 0.9, 0.99),
@@ -5969,7 +5957,7 @@ _register(
 _register(
     "hdr_merge",
     lambda s, d: sketch.hdr_merge(
-        _t_raw(s, d, "documents").withColumn("shard", F.col("doc_id") % 3),
+        _t(s, d, "documents").withColumn("shard", F.col("doc_id") % 3),
         "n_chars", "shard",
     ),
     f"""
@@ -6354,7 +6342,7 @@ def _hits_links(s: SparkSession, d: str) -> DataFrame:
     be compared row-for-row."""
     doc_id = F.col("doc_id")
     return (
-        _t_raw(s, d, "documents")
+        _t(s, d, "documents")
         .select(
             F.col("source").alias("src"),
             F.explode(F.array(
@@ -6422,7 +6410,7 @@ _KMV_K = 16
 _register(
     "kmv_distinct",
     lambda s, d: sketch.kmv_distinct(
-        _t_raw(s, d, "documents"), "text", "source", k=_KMV_K
+        _t(s, d, "documents"), "text", "source", k=_KMV_K
     ),
     sketch.kmv_distinct_sql(
         "SELECT source, text FROM documents", "text", "source", _KMV_K
@@ -6432,7 +6420,7 @@ _register(
 _register(
     "kmv_merge",
     lambda s, d: sketch.kmv_merge(
-        _t_raw(s, d, "documents"), "text", "source", k=_KMV_K
+        _t(s, d, "documents"), "text", "source", k=_KMV_K
     ),
     sketch.kmv_merge_sql(
         "SELECT source, text FROM documents", "text", "source", _KMV_K
@@ -6445,8 +6433,8 @@ _register(
 _register(
     "kmv_crawl_overlap",
     lambda s, d: sketch.kmv_overlap(
-        _t_raw(s, d, "documents").filter(F.col("doc_id") % 4 != 0),
-        _t_raw(s, d, "documents").filter(F.col("doc_id") % 4 != 1),
+        _t(s, d, "documents").filter(F.col("doc_id") % 4 != 0),
+        _t(s, d, "documents").filter(F.col("doc_id") % 4 != 1),
         "text", k=64,
     ),
     sketch.kmv_overlap_sql(
@@ -6850,7 +6838,7 @@ def _phrase_oracle(phrase: str = _PHRASE) -> str:
 
 _register(
     "phrase_search",
-    lambda s, d: retrieval.phrase_search(_t_raw(s, d, "documents"), _PHRASE),
+    lambda s, d: retrieval.phrase_search(_t(s, d, "documents"), _PHRASE),
     _phrase_oracle(),
 )
 
@@ -7008,7 +6996,7 @@ _register("resolve_redirects", _redirects_q, _redirects_oracle())
 # body and the 'sig' line are unique (kept).
 def _boiler_docs(s: SparkSession, d: str) -> DataFrame:
     did = F.col("doc_id")
-    return _t_raw(s, d, "documents").select(
+    return _t(s, d, "documents").select(
         "doc_id", F.col("source").alias("host"),
         F.concat_ws(
             "\n",
@@ -7075,7 +7063,7 @@ _register(
 def _recrawl_q(s: SparkSession, d: str) -> DataFrame:
     did = F.col("doc_id")
     p = (F.when(did % 3 == 0, 1).when(did % 3 == 1, 2).otherwise(4))
-    base = _t_raw(s, d, "documents").select(
+    base = _t(s, d, "documents").select(
         F.concat(F.lit("u"), did.cast("string")).alias("url"),
         p.alias("p"),
         F.explode(F.sequence(F.lit(1), F.lit(4))).alias("snap"),
@@ -7142,7 +7130,7 @@ def _trap_q(s: SparkSession, d: str) -> DataFrame:
         F.when(did % 4 == 0, F.md5(F.col("source")))
         .otherwise(F.md5(did.cast("string")))
     )
-    pages = _t_raw(s, d, "documents").select(
+    pages = _t(s, d, "documents").select(
         url.alias("url"), dig.alias("digest")
     )
     return pipeline.url_trap_stats(pages, min_urls=5, min_ratio=3.0)
@@ -7530,7 +7518,7 @@ def _tracking_pages(s: SparkSession, d: str) -> DataFrame:
     base = F.concat(F.lit("https://t.example/p?id="), ck)
     utm = F.concat(F.lit("&utm=u"), (did % 7).cast("string"))
     digest = F.md5(ck)
-    docs = _t_raw(s, d, "documents")
+    docs = _t(s, d, "documents")
     plain = docs.filter(did % 3 != 0).select(
         F.concat(base, utm).alias("url"), digest.alias("digest")
     )
@@ -7622,7 +7610,7 @@ def _mirror_q(s: SparkSession, d: str) -> DataFrame:
     did = F.col("doc_id")
     ckey = F.floor(did / 20)
     grp = F.when(ckey % 3 == 0, (did % 20) % 2).otherwise((did % 20) % 4)
-    pages = _t_raw(s, d, "documents").select(
+    pages = _t(s, d, "documents").select(
         F.col("source").alias("host"),
         F.md5(F.concat(ckey.cast("string"), F.lit("|"),
                        grp.cast("string"))).alias("digest"),
@@ -7730,7 +7718,7 @@ _register(
 # syndicated to a separate mirror host (the true cross-site leakage
 # that survives both splits and the audit must count).
 def _split_pages(s: SparkSession, d: str) -> DataFrame:
-    docs = _t_raw(s, d, "documents")
+    docs = _t(s, d, "documents")
     did = F.col("doc_id")
     host = F.concat(F.lit("https://"), "source", F.lit(".example/"))
     base = docs.select(
@@ -7887,7 +7875,7 @@ def _refresh_q(s: SparkSession, d: str) -> DataFrame:
     url = F.concat(F.lit("http://src"), (did % 20).cast("string"),
                    F.lit(".example"), path)
     p = F.when(did % 3 == 0, 1).when(did % 3 == 1, 2).otherwise(4)
-    base = _t_raw(s, d, "documents").select(url.alias("url"), p.alias("p"))
+    base = _t(s, d, "documents").select(url.alias("url"), p.alias("p"))
     hist = base.select(
         "url", "p",
         F.explode(F.sequence(F.lit(1), F.lit(4))).alias("snap"),
