@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import datetime
 import re
-from html.parser import HTMLParser
 
 # --------------------------------------------------------------------------
 # Dictionaries (analog of the reference's dict.json / banks.json; consumed
@@ -208,50 +207,18 @@ class _Node:
         self.order = order
 
 
-class _TreeBuilder(HTMLParser):
-    """Build a lightweight element tree; comments are discarded."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.root = _Node("#root", 0)
-        self._stack = [self.root]
-        self._order = 0
-
-    def handle_starttag(self, tag, attrs):
-        if tag in _VOID_TAGS:
-            if tag == "br":
-                self._stack[-1].children.append(" ")
-            return
-        self._order += 1
-        node = _Node(tag, self._order)
-        self._stack[-1].children.append(node)
-        self._stack.append(node)
-
-    def handle_endtag(self, tag):
-        if tag in _VOID_TAGS:
-            return
-        # Pop to the matching open tag if present (tolerates misnesting).
-        for i in range(len(self._stack) - 1, 0, -1):
-            if self._stack[i].tag == tag:
-                del self._stack[i:]
-                break
-
-    def handle_data(self, data):
-        if data:
-            self._stack[-1].children.append(data)
-
-
 def _norm(s: str) -> str:
     """Whitespace-collapse (the scrub analog, process_table.py:237,252,263)."""
     return " ".join(s.split())
 
 
-# --- fast tokenizer path -----------------------------------------------------
-# Regex-based HTML tokenizer producing the same _Node tree as _TreeBuilder
-# (~3x faster than html.parser, which dominates kernel CPU). Semantics match
-# html.parser(convert_charrefs=True) for the token grammar this engine
-# defines: tags without '>' inside attribute values, non-greedy comments,
-# raw-text script/style bodies, '<' followed by a non-letter treated as text.
+# --- HTML tokenizer ----------------------------------------------------------
+# Regex-based HTML tokenizer building the _Node tree (~3x faster than a
+# stdlib html.parser tree builder, which would dominate kernel CPU).
+# Semantics match html.parser(convert_charrefs=True) for the token grammar
+# this engine defines: tags without '>' inside attribute values, non-greedy
+# comments, raw-text script/style bodies, '<' followed by a non-letter
+# treated as text.
 
 _TOKEN_RX = re.compile(
     r"<!--.*?-->"                       # comment (dropped)
@@ -1487,8 +1454,6 @@ def extract(url: str, html: bytes, lang: str) -> dict:
         }
 
 
-USE_FAST_PARSER = True
-
 # HTML charset sniffing (WHATWG encoding-sniffing order, stdlib-only):
 # BOM wins, then a declared <meta charset=...> / http-equiv content-type
 # within the first 1024 bytes, then UTF-8. Per the HTML5 spec,
@@ -1571,14 +1536,6 @@ def decode_html(raw) -> str:
     return str(raw, "utf-8", "replace")
 
 
-def _parse_tree(text: str) -> _Node:
-    if USE_FAST_PARSER:
-        return _fast_parse(text)
-    builder = _TreeBuilder()
-    builder.feed(text)
-    return builder.root
-
-
 def _extract_inner(url: str, html: bytes, lang: str) -> dict:
     # Content-type sniff (P7 analog, releve_bancaire.py:35-42 extension
     # guard): PDF payloads take the layout-parse path (text operators from
@@ -1600,7 +1557,7 @@ def _extract_inner(url: str, html: bytes, lang: str) -> dict:
     if pdf_at >= 0 and b"<" not in head[:pdf_at]:
         return _analyze(url, pdf_text(bytes(hv[pdf_at:])), [], [])
     page = decode_html(hv)
-    root = _parse_tree(page)
+    root = _fast_parse(page)
 
     # 1. Main-content container scoring (boilerplate strip + P4 analog).
     candidates: list = []

@@ -20,18 +20,34 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
 
-HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
+
+def _digests(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact duplicate groups by content digest; keeper = min id."""
+    """Exact duplicate groups by content digest; keeper = min id. The one
+    definition of an exact duplicate: the dedup-first compositions
+    (``near_dup_pairs_dedup_first``, ``simhash_pairs_dedup_first``,
+    ``cluster_members``, ``pipeline.clean_corpus``) all collapse through
+    this aggregation and ``keepers``."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
+        _digests(docs, id_col, text_col)
         .groupBy("digest")
         .agg(
             F.min(id_col).alias("keeper"),
             F.count("*").alias("n_copies"),
         )
+    )
+
+
+def keepers(docs: DataFrame, groups: DataFrame,
+            id_col: str = "doc_id") -> DataFrame:
+    """``docs`` restricted to the keepers of ``exact_dedup`` ``groups``
+    (one min-id representative per digest) — a semi-join, so the rows
+    keep every input column."""
+    return docs.join(
+        groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
     )
 
 
@@ -174,11 +190,14 @@ def minhash_signature(docs: DataFrame, id_col: str = "doc_id",
     groupBy(id).agg(min((a_i*x+b_i) mod P) for i in 0..k) -> sig array.
     One shuffle, k longs per doc per map partition (partial agg).
 
-    A shuffle-free variant (array_min over transforms, pure projection)
-    was measured SLOWER end-to-end: LSH pairing consumes the signature
-    three times (bands + both join sides), and this groupBy's exchange is
-    a ReusedExchange for all three consumers, whereas the narrow form
-    recomputes the per-shingle md5 pass per consumer. Keep the aggregate.
+    Callers: ``minhash_lsh_pairs`` (bands + both verify-join sides, off
+    one lazy checkpoint), ``lsh_threshold_curve``, both sides of
+    ``incremental_near_dup``, and the streaming corpus band table
+    (``streaming.neardup_stream.corpus_band_table``). The shuffle-free
+    variant, ``minhash_signature_rowwise``, was measured SLOWER for the
+    batch pair generator: this groupBy's exchange is a ReusedExchange for
+    all three consumers, whereas the narrow form recomputes the
+    per-shingle md5 pass per consumer. Keep the aggregate for batch.
     Returns (id, sig: array<long> length k)."""
     exploded = docs.select(
         F.col(id_col), F.explode(shingles(text_col)).alias("sh")
@@ -201,6 +220,16 @@ def minhash_signature(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def sig_agreement(left: str, right: str, k: int) -> F.Column:
+    """MinHash Jaccard estimate: the fraction of the k positions at which
+    two signature columns hold equal minhashes. The one estimate behind
+    ``minhash_lsh_pairs``, ``incremental_near_dup`` and the streaming
+    admission, so their sim values stay directly comparable."""
+    return F.size(
+        F.filter(F.zip_with(left, right, lambda p, q: p == q), lambda v: v)
+    ) / float(k)
+
+
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", k: int = MINHASH_K,
                       bands: int = MINHASH_BANDS,
@@ -221,7 +250,6 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     exact-dedup FIRST is the preferred fix; the cap is the backstop).
     The size aggregation groups on the same (band_idx, band_key) as the
     pair join, so AQE reuses the exchange rather than adding a shuffle."""
-    r = k // bands
     # The signature frame feeds THREE consumers (band explode + both
     # sides of the verify join). The groupBy exchange is a ReusedExchange
     # across them, but each consumer still re-embeds (and re-analyzes)
@@ -231,21 +259,9 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     sig = minhash_signature(docs, id_col, text_col, k).localCheckpoint(
         eager=False
     )
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                "|",
-                *[
-                    F.element_at("sig", b * r + j + 1).cast("string")
-                    for j in range(r)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band_idx", "band_key")
-    )
+    # the projection drops doc_sig: only ids cross the band join
+    banded = banded_sigs(sig, "doc", id_col=id_col, k=k,
+                         bands=bands).select("doc_id", "band_idx", "band_key")
     if max_bucket is not None:
         small = (
             banded.groupBy("band_idx", "band_key")
@@ -254,8 +270,8 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
             .select("band_idx", "band_key")
         )
         banded = banded.join(small, ["band_idx", "band_key"])
-    left = banded.select(F.col(id_col).alias("a"), "band_idx", "band_key")
-    right = banded.select(F.col(id_col).alias("b"), "band_idx", "band_key")
+    left = banded.select(F.col("doc_id").alias("a"), "band_idx", "band_key")
+    right = banded.select(F.col("doc_id").alias("b"), "band_idx", "band_key")
     cand = (
         left.join(right, ["band_idx", "band_key"])
         .filter(F.col("a") < F.col("b"))
@@ -264,11 +280,8 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
     sa = sig.select(F.col(id_col).alias("a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col(id_col).alias("b"), F.col("sig").alias("sb"))
-    matches = F.size(
-        F.filter(F.zip_with("sa", "sb", lambda p, q: p == q), lambda v: v)
-    )
     return cand.join(sa, "a").join(sb, "b").select(
-        "a", "b", (matches / float(k)).alias("sim_est")
+        "a", "b", sig_agreement("sa", "sb", k).alias("sim_est")
     )
 
 
@@ -463,25 +476,27 @@ def near_dup_pairs_dedup_first(docs: DataFrame, id_col: str = "doc_id",
 
     Returns (a, b, sim_est, n_copies_a, n_copies_b), a/b representative
     ids with a < b."""
-    digest = F.md5(F.col(text_col)).alias("digest")
+    return _dedup_first(
+        docs, id_col, text_col, "sim_est",
+        lambda reps: minhash_lsh_pairs(reps, id_col, text_col, k, bands),
+    )
+
+
+def _dedup_first(docs: DataFrame, id_col: str, text_col: str, metric: str,
+                 pair_gen) -> DataFrame:
+    """The dedup-first body shared by the MinHash and SimHash pair
+    generators: ``pair_gen`` runs on exact-dedup keepers only, and each
+    reported (a, b, metric) pair gains both sides' exact-copy counts."""
     # the digest-group table feeds the representative semi-join AND both
     # multiplicity attaches — one lazy checkpoint, three references
-    groups = (
-        docs.select(F.col(id_col), digest)
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_copies"))
-        .localCheckpoint(eager=False)
-    )
-    reps = docs.join(
-        groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
-    )
-    pairs = minhash_lsh_pairs(reps, id_col, text_col, k, bands)
+    groups = exact_dedup(docs, id_col, text_col).localCheckpoint(eager=False)
+    pairs = pair_gen(keepers(docs, groups, id_col))
     na = groups.select(F.col("keeper").alias("a"),
                        F.col("n_copies").alias("n_copies_a"))
     nb = groups.select(F.col("keeper").alias("b"),
                        F.col("n_copies").alias("n_copies_b"))
     return pairs.join(na, "a").join(nb, "b").select(
-        "a", "b", "sim_est", "n_copies_a", "n_copies_b"
+        "a", "b", metric, "n_copies_a", "n_copies_b"
     )
 
 
@@ -636,7 +651,6 @@ def incremental_dedup_against_index(new_docs: DataFrame, index: DataFrame,
     return clean.unionByName(verified_new)
 
 
-SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4  # 4 x 16-bit band keys -> pigeonhole: hamming<=3 pairs
 #                     are guaranteed to share at least one exact chunk
 
@@ -780,25 +794,10 @@ def simhash_pairs_dedup_first(docs: DataFrame, id_col: str = "doc_id",
     the chunk buckets instead of a 10^14-pair join.
 
     Returns (a, b, hamming, n_copies_a, n_copies_b), a < b."""
-    digest = F.md5(F.col(text_col)).alias("digest")
-    # the digest-group table feeds the representative semi-join AND both
-    # multiplicity attaches — one lazy checkpoint, three references
-    groups = (
-        docs.select(F.col(id_col), digest)
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_copies"))
-        .localCheckpoint(eager=False)
-    )
-    reps = docs.join(
-        groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
-    )
-    pairs = simhash_hamming_pairs(reps, id_col, text_col, max_hamming)
-    na = groups.select(F.col("keeper").alias("a"),
-                       F.col("n_copies").alias("n_copies_a"))
-    nb = groups.select(F.col("keeper").alias("b"),
-                       F.col("n_copies").alias("n_copies_b"))
-    return pairs.join(na, "a").join(nb, "b").select(
-        "a", "b", "hamming", "n_copies_a", "n_copies_b"
+    return _dedup_first(
+        docs, id_col, text_col, "hamming",
+        lambda reps: simhash_hamming_pairs(reps, id_col, text_col,
+                                           max_hamming),
     )
 
 
@@ -920,19 +919,14 @@ def cluster_members(docs: DataFrame, id_col: str = "doc_id",
     collapse -> LSH on representatives -> connected components -> digest
     re-attach), exposed so downstream consumers (cluster summaries, best
     -doc selection, cluster-keyed splits) share one definition."""
-    digests = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
     # groups feeds the representative semi-join AND the component
     # re-attach below — one lazy checkpoint instead of two digest
     # aggregations over the corpus (guide section 3.3)
-    groups = digests.groupBy("digest").agg(
-        F.min(id_col).alias("keeper")
+    groups = exact_dedup(docs, id_col, text_col).select(
+        "digest", "keeper"
     ).localCheckpoint(eager=False)
-    reps = docs.join(
-        groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
-    )
-    pairs = minhash_lsh_pairs(reps, id_col, text_col).filter(
-        F.col("sim_est") >= 0.5
-    )
+    pairs = minhash_lsh_pairs(keepers(docs, groups, id_col), id_col,
+                              text_col).filter(F.col("sim_est") >= 0.5)
     comp = connected_components(pairs)
     # every representative gets a component: its near-dup component if it
     # paired, else itself (covers pure exact-dup groups)
@@ -942,7 +936,7 @@ def cluster_members(docs: DataFrame, id_col: str = "doc_id",
         "digest",
         F.coalesce("component", "keeper").alias("component"),
     )
-    return digests.join(rep_comp, "digest")
+    return _digests(docs, id_col, text_col).join(rep_comp, "digest")
 
 
 def cluster_best_docs(docs: DataFrame, id_col: str = "doc_id",
@@ -1602,11 +1596,7 @@ def incremental_near_dup(new_docs: DataFrame, corpus: DataFrame,
         .join(sc.select(F.col(id_col).alias("corpus_id"),
                         F.col("sig").alias("corpus_sig")), "corpus_id")
     )
-    matches = F.size(F.filter(
-        F.zip_with("new_sig", "corpus_sig", lambda p, q: p == q),
-        lambda v: v,
-    ))
-    sim = matches / float(k)
+    sim = sig_agreement("new_sig", "corpus_sig", k)
     return (
         cand.select("new_id", "corpus_id", sim.alias("sim_raw"))
         .filter(F.col("sim_raw") >= threshold)
@@ -1759,9 +1749,9 @@ def minhash_signature_rowwise(docs: DataFrame, id_col: str = "doc_id",
     shingle-hash array instead of an explode+groupBy. This is the form
     a STREAMING pipeline needs: a stateful aggregation would force
     update/complete output mode, while a projection keeps append mode
-    and stream-static joins legal. (For the BATCH pair generator the
-    aggregate form stays preferred — its exchange is reused by all
-    three signature consumers; see minhash_signature's docstring.)
+    and stream-static joins legal. Its one caller is the stream side of
+    ``streaming.neardup_stream.neardup_admission_stream``; every batch
+    operator uses the aggregate form (see minhash_signature's docstring).
 
     The shingle-hash array materializes as ONE column first, so the
     md5 digest is computed once per shingle regardless of k.
@@ -1792,9 +1782,13 @@ def banded_sigs(sig: DataFrame, tag: str, id_col: str = "doc_id",
                 k: int = MINHASH_K, bands: int = MINHASH_BANDS,
                 extra: tuple = ()) -> DataFrame:
     """LSH band keys from a (id, sig) frame: one row per (band_idx,
-    band_key) with the full signature carried for the verify step.
-    Shared by the batch incremental admission and its streaming twin so
-    the band layout cannot drift between them."""
+    band_key), with the id and signature renamed ``{tag}_id`` /
+    ``{tag}_sig``. The one band layout, shared so it cannot drift:
+    ``minhash_lsh_pairs`` (projected to (doc_id, band_idx, band_key), so
+    the signature stays out of its band join), ``incremental_near_dup``
+    (both sides, projected the same way), and the streaming twin's
+    ``corpus_band_table`` / ``neardup_admission_stream``, which carry the
+    signature to their stream-static verify."""
     r = k // bands
     band_arr = F.array(*[
         F.concat_ws("|", *[

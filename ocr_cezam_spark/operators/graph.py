@@ -82,8 +82,8 @@ def _hosts(links: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 
 def pagerank_converged(links: DataFrame, tol: float = 1e-9,
                        max_iters: int = 50, damping: float = DAMPING,
-                       src_col: str = "src", dst_col: str = "dst",
-                       checkpoint_every: int = 1) -> DataFrame:
+                       src_col: str = "src",
+                       dst_col: str = "dst") -> DataFrame:
     """Production-shape PageRank: dangling-mass redistribution plus an
     L1-convergence loop — the full model, vs the fixed-iteration
     ``pagerank`` above (kept unrolled because its DuckDB oracle twin is a
@@ -103,13 +103,10 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
     and the delta. ``localCheckpoint`` truncates the growing lineage
     (the dedup.connected_components pattern) — without it the plan
     doubles per iteration and Catalyst analysis dominates past ~15
-    iterations. Default cadence is EVERY iteration: each iteration runs
-    two driver actions (dangling sum, delta) plus feeds the next, so
-    un-materialized lineage would re-execute the |edges|-sized join+agg
-    up to checkpoint_every extra times per window — materializing the
-    |hosts|-sized frame once per iteration is strictly cheaper
-    (review-pass fix; checkpoint_every > 1 only pays if the scalar
-    actions are fused out).
+    iterations. Every iteration is checkpointed: its two driver actions
+    (dangling sum, delta) and the next iteration all read the
+    |hosts|-sized frame, which is cheaper to materialize once than to
+    re-derive through the |edges|-sized join+agg.
 
     Returns (host, rank) with raw double ranks (callers round; the
     convergence loop's iteration count is data-dependent, so a frozen
@@ -130,7 +127,7 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
     ranks = hosts.select(
         "host", F.lit(1.0 / n).alias("rank")
     ).localCheckpoint()
-    for i in range(max_iters):
+    for _ in range(max_iters):
         dangling = (
             ranks.join(dangling_hosts, "host")
             .agg(F.sum("rank").alias("s"))
@@ -153,9 +150,7 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
                                  + F.lit(dangling / n))
                 ).alias("rank"),
             )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            stepped = stepped.localCheckpoint()
+        ).localCheckpoint()
         delta = stepped.agg(
             F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d")
         ).first()["d"]

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from .dedup import paragraph_dedup
+from .dedup import exact_dedup, keepers, paragraph_dedup
 from .textstats import gopher_quality, token_quality
 
 
@@ -43,14 +43,8 @@ def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
     c = cleaned.filter(F.col("text_dedup") != "").select(
         F.col(id_col), F.col("text_dedup").alias(text_col)
     ).localCheckpoint(eager=False)
-    keepers = (
-        c.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keeper"))
-    )
-    reps = c.join(
-        keepers.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
-    ).localCheckpoint(eager=False)
+    groups = exact_dedup(c, id_col, text_col)
+    reps = keepers(c, groups, id_col).localCheckpoint(eager=False)
     # The quality gates tokenize on single spaces; the reassembled text
     # joins paragraphs with '\n', which would otherwise merge the words
     # around every boundary into one token (and count the newline as a

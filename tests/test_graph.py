@@ -74,14 +74,12 @@ def test_pagerank_converged_matches_numpy_with_dangling_nodes(spark):
 
 def test_pagerank_converged_stops_before_max_iters(spark):
     """A loose tolerance converges in a handful of iterations — the loop
-    must stop early (checkpoint cadence exercised by checkpoint_every=2)
-    and still conserve mass."""
+    must stop early and still conserve mass."""
     edges = [("a", "b"), ("b", "a"), ("b", "c")]
     links = spark.createDataFrame(edges, ["src", "dst"])
     got = {r["host"]: r["rank"]
            for r in graph.pagerank_converged(
-               links, tol=1e-6, max_iters=100, checkpoint_every=2
-           ).collect()}
+               links, tol=1e-6, max_iters=100).collect()}
     want = _numpy_pagerank_dangling(edges)
     for h, w in want.items():
         assert abs(got[h] - w) < 1e-5, (h, got[h], w)

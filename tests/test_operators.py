@@ -1909,6 +1909,41 @@ def test_incremental_near_dup_estimate_matches_batch_pair_generator(spark):
     assert abs(inc[0]["sim_est"] - batch[(1, 101)]) < 5e-5
 
 
+def test_incremental_near_dup_recovers_every_cross_half_batch_pair(spark):
+    """Split one corpus into new/corpus halves: every cross-half pair the
+    batch generator reports at sim_est >= 0.5 must also be admitted by
+    incremental_near_dup with the same 4-dp estimate — both operators
+    band through one layout and score with one agreement estimate."""
+    import random
+
+    from ocr_cezam_spark.functions.numeric import round_he
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(300)]
+    rows = []
+    for base_i in range(8):
+        base = [rng.choice(vocab) for _ in range(40)]
+        for v in range(4):
+            words = list(base)
+            for _ in range(v * 3):
+                words[rng.randrange(len(words))] = rng.choice(vocab)
+            rows.append((base_i * 4 + v, " ".join(words)))
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    new = docs.filter(F.col("doc_id") % 2 == 1)
+    corpus = docs.filter(F.col("doc_id") % 2 == 0)
+    batch = {}
+    for r in dedup.minhash_lsh_pairs(docs).filter(
+        (F.col("sim_est") >= 0.5) & (F.col("a") % 2 != F.col("b") % 2)
+    ).select("a", "b", round_he("sim_est", 4).alias("sim")).collect():
+        key = (r["a"], r["b"]) if r["a"] % 2 else (r["b"], r["a"])
+        batch[key] = r["sim"]
+    inc = {(r["new_id"], r["corpus_id"]): r["sim_est"]
+           for r in dedup.incremental_near_dup(new, corpus).collect()}
+    assert len(batch) >= 8
+    for key, sim in batch.items():
+        assert inc.get(key) == sim, (key, sim, inc.get(key))
+
+
 def test_sq8_topk_recall_and_constant_dims(spark):
     """SQ8 shortlist + exact re-rank must recover nearly all of the
     exact top-k (8-bit per-dim codes lose little at dim 64), and a
